@@ -35,10 +35,21 @@ object Sinks {
     * Codec is a real 100 TB lever: zstd trades ~10-20% CPU for ~25-30%
     * smaller files than snappy (Spark's default) — at fleet scale that is
     * storage AND scan-I/O; per-table choice belongs to the writer.
+    *
+    * A partitioned write is first clustered on the partition columns with
+    * the AQE `rebalance` hint. Without it every write task emits one file
+    * per partition value it happens to hold (tasks × values small files);
+    * with it each value lands in one task, so a small value is one file.
+    * A value larger than `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+    * is still split across tasks by AQE's skew handling, so no value
+    * collapses into one giant file. Non-partitioned writes are unchanged.
     */
   def writeParquet(df: DataFrame, path: String, partitionBy: Seq[String] = Nil,
                    codec: String = "snappy"): Unit = {
-    val w = df.write.mode("overwrite").option("compression", codec)
+    import org.apache.spark.sql.functions.col
+    val clustered =
+      if (partitionBy.isEmpty) df else df.hint("rebalance", partitionBy.map(col): _*)
+    val w = clustered.write.mode("overwrite").option("compression", codec)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
   }
 
@@ -65,28 +76,6 @@ object Sinks {
       s"`${f.name}` $t"
     }.mkString(", ")
 
-  /** Small-file compaction: rewrite a directory into ⌈rows / rowsPerFile⌉
-    * files (exact for flat layouts; per-PARTITION ⌈rows / rowsPerFile⌉
-    * best-effort for Hive layouts — see the salting note in the body).
-    * Streaming sinks and incremental upserts accrete small files
-    * until footer-listing and task-scheduling overheads dominate scans —
-    * periodic compaction is table maintenance every lake runs.
-    *
-    * Safety and fidelity rules (each one a reviewed failure mode):
-    *  - the read merges schemas, so compacting an evolved table cannot
-    *    drop columns that the sampled footer lacks;
-    *  - `partitionBy` preserves a Hive layout (pass the table's partition
-    *    columns — a flat rewrite would silently end partition pruning);
-    *  - the new copy is STAGED completely, then swapped in via rename:
-    *    the original is deleted only after the staged copy is whole, and
-    *    if the swap itself fails the staged copy survives as the recovery
-    *    copy (it is never deleted unless the original is intact);
-    *  - rename (not a second Spark write) also makes the file-count
-    *    contract exact — a rewrite would re-split by scan partitioning.
-    *
-    * Content round trip + layout pinned in SinksSpec2; combine with
-    * [[writeSorted]] when a sort key should also tighten row-group stats.
-    */
   private val swapMarker = "_graft_swap_started"
 
   /** Heal the on-disk state a KILLED [[compact]] run can leave behind, so a
@@ -125,6 +114,28 @@ object Sinks {
     if (fs.exists(strayMarker)) fs.delete(strayMarker, false): Unit
   }
 
+  /** Small-file compaction: rewrite a directory into ⌈rows / rowsPerFile⌉
+    * files (exact for flat layouts; per-PARTITION ⌈rows / rowsPerFile⌉
+    * best-effort for Hive layouts — see the salting note in the body).
+    * Streaming sinks and incremental upserts accrete small files
+    * until footer-listing and task-scheduling overheads dominate scans —
+    * periodic compaction is table maintenance every lake runs.
+    *
+    * Safety and fidelity rules (each one a reviewed failure mode):
+    *  - the read merges schemas, so compacting an evolved table cannot
+    *    drop columns that the sampled footer lacks;
+    *  - `partitionBy` preserves a Hive layout (pass the table's partition
+    *    columns — a flat rewrite would silently end partition pruning);
+    *  - the new copy is STAGED completely, then swapped in via rename:
+    *    the original is deleted only after the staged copy is whole, and
+    *    if the swap itself fails the staged copy survives as the recovery
+    *    copy (it is never deleted unless the original is intact);
+    *  - rename (not a second Spark write) also makes the file-count
+    *    contract exact — a rewrite would re-split by scan partitioning.
+    *
+    * Content round trip + layout pinned in SinksSpec2; combine with
+    * [[writeSorted]] when a sort key should also tighten row-group stats.
+    */
   def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
               rowsPerFile: Long, partitionBy: Seq[String] = Nil): Unit = {
     require(rowsPerFile > 0, s"rowsPerFile must be positive, got $rowsPerFile")
@@ -213,18 +224,6 @@ object Sinks {
       .write.mode("overwrite").parquet(path)
   }
 
-  /** K1e — parquet BLOOM FILTERS: point-lookup data skipping for columns
-    * where min/max stats are useless because values are high-cardinality
-    * and unordered (content hashes, canonical URLs, doc ids after a
-    * shuffle — exactly the probe keys of the dedup ledger). A sorted/
-    * z-ordered layout skips by RANGE; a bloom filter skips a row group
-    * when a point predicate's value is provably absent, at ~1 byte/value
-    * — the difference between an incremental-dedup probe that reads the
-    * whole corpus table and one that reads the few row groups that might
-    * contain its hashes. `ndv` sizes the filter (expected distinct values
-    * per ROW GROUP — overestimating wastes footer bytes, underestimating
-    * inflates false positives; size it to rowGroupRows, not table NDV).
-    */
   /** BUCKETED table layout — the warehouse decision that removes the join
     * shuffle entirely (SCALE.md §Joins): both fact tables hash-bucketed on
     * the join key with the SAME bucket count make every subsequent
@@ -253,6 +252,18 @@ object Sinks {
     sorted.saveAsTable(tableName)
   }
 
+  /** K1e — parquet BLOOM FILTERS: point-lookup data skipping for columns
+    * where min/max stats are useless because values are high-cardinality
+    * and unordered (content hashes, canonical URLs, doc ids after a
+    * shuffle — exactly the probe keys of the dedup ledger). A sorted/
+    * z-ordered layout skips by RANGE; a bloom filter skips a row group
+    * when a point predicate's value is provably absent, at ~1 byte/value
+    * — the difference between an incremental-dedup probe that reads the
+    * whole corpus table and one that reads the few row groups that might
+    * contain its hashes. `ndv` sizes the filter (expected distinct values
+    * per ROW GROUP — overestimating wastes footer bytes, underestimating
+    * inflates false positives; size it to rowGroupRows, not table NDV).
+    */
   def writeBloomFiltered(df: DataFrame, path: String, bloomCols: Seq[String],
                          ndv: Long = 100000L): Unit = {
     require(bloomCols.nonEmpty, "writeBloomFiltered: need at least one column")
@@ -308,23 +319,6 @@ object Sinks {
       .write.mode("overwrite").parquet(path)
   }
 
-  /** K4 for the lake: partition-scoped parquet upsert. Rows in `updates`
-    * replace same-key rows and insert new keys — but ONLY partitions that
-    * contain an updated key are rewritten (dynamic partition overwrite);
-    * at 100 TB an upsert touching one day must not rewrite the year, and
-    * SinksSpec2 pins that untouched partitions' files are left alone.
-    *
-    * Mechanics: affected partitions = the updates' partition values PLUS
-    * any partition where an updated key currently lives (a key whose
-    * update MOVES it between partitions must have its old row deleted, so
-    * the old partition rewrites too). Both sets are value-distinct —
-    * bounded by partition count, not data. Non-updated rows of affected
-    * partitions are kept (anti join on key), the updates unioned in,
-    * everything staged next to the target (Spark refuses a write that
-    * overlaps its own scan; staging on the SAME filesystem keeps this
-    * cluster-valid), then dynamic overwrite rewrites only the affected
-    * partitions and the staging dir is removed.
-    */
   /** Hive-layout partition directory segment for one value (writer-escaped,
     * null → the default-partition name).
     */
@@ -376,6 +370,23 @@ object Sinks {
     fs.delete(staged, true): Unit
   }
 
+  /** K4 for the lake: partition-scoped parquet upsert. Rows in `updates`
+    * replace same-key rows and insert new keys — but ONLY partitions that
+    * contain an updated key are rewritten (dynamic partition overwrite);
+    * at 100 TB an upsert touching one day must not rewrite the year, and
+    * SinksSpec2 pins that untouched partitions' files are left alone.
+    *
+    * Mechanics: affected partitions = the updates' partition values PLUS
+    * any partition where an updated key currently lives (a key whose
+    * update MOVES it between partitions must have its old row deleted, so
+    * the old partition rewrites too). Both sets are value-distinct —
+    * bounded by partition count, not data. Non-updated rows of affected
+    * partitions are kept (anti join on key), the updates unioned in,
+    * everything staged next to the target (Spark refuses a write that
+    * overlaps its own scan; staging on the SAME filesystem keeps this
+    * cluster-valid), then dynamic overwrite rewrites only the affected
+    * partitions and the staging dir is removed.
+    */
   def upsertParquet(spark: org.apache.spark.sql.SparkSession, dir: String,
                     updates: DataFrame, keyCols: Seq[String],
                     partitionCol: String,

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.ops.{Dedup, Derive}
+import graft.ops.Derive
 
 /** Gold layer: silver → 4 analytics outputs.
   *
@@ -15,17 +15,25 @@ import graft.ops.{Dedup, Derive}
   *   - `gld_pais` / `gld_org`: equality filters on tipo_de_parceiro (P4,
   *     gold.py:42-43) over the derived frame, projected to the two derived
   *     columns (P3, gold.py:56-58).
-  *   - `gld_acordos`: the silver 11-column projection, distinct (gold.py:51).
+  *   - `gld_acordos`: the silver 11-column projection (gold.py:51).
+  *
+  * Precondition: the input is [[Silver.transform]] output, which ends in a
+  * whole-row distinct. The reference's gold-side distinct on `gld_acordos`
+  * is therefore the identity and is not repeated here (the incremental run
+  * relies on the same fact).
   *
   * The reference computes ALL of this 4× (one identical Airflow task per
   * output, dag_main.py:62-77 + gold.py:54-59). Here the derived frame is
-  * computed once and persisted (MEMORY_AND_DISK) before fan-out to the four
-  * outputs — compute once, write four sinks.
+  * computed once and persisted (MEMORY_AND_DISK), and all four outputs are
+  * projections of it ([[fanOut]]) — compute once, write four sinks.
   */
 object Gold {
 
   final case class Outputs(acordos: DataFrame, hier: DataFrame,
                            pais: DataFrame, org: DataFrame)
+
+  private val derivedCols = Seq("local_completo", "acordo_recurso")
+  private val twoCols = derivedCols.map(col)
 
   def derive(silver: DataFrame): DataFrame =
     silver
@@ -34,14 +42,20 @@ object Gold {
       .withColumn("acordo_recurso",
         Derive.composite(col("tipo_de_acordo"), col("recursos")))
 
+  /** The four gold outputs by sink name, each a projection of the
+    * [[derive]] frame. The one definition both the batch [[transform]] and
+    * [[IncrementalMedallion.runAcordos]] write.
+    */
+  val fanOut: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "acordos" -> (_.drop(derivedCols: _*)),
+    "hier"    -> (_.select(twoCols: _*)),
+    "pais"    -> (_.filter(col("tipo_de_parceiro") === "País").select(twoCols: _*)),
+    "org"     -> (_.filter(col("tipo_de_parceiro") === "Organização").select(twoCols: _*)))
+
   def transform(silver: DataFrame, persist: Boolean = true): Outputs = {
     val hier = derive(silver)
     val h = if (persist) hier.persist(StorageLevel.MEMORY_AND_DISK) else hier
-    val twoCols = Seq(col("local_completo"), col("acordo_recurso"))
-    Outputs(
-      acordos = Dedup.distinctAll(silver),
-      hier    = h.select(twoCols: _*),
-      pais    = h.filter(col("tipo_de_parceiro") === "País").select(twoCols: _*),
-      org     = h.filter(col("tipo_de_parceiro") === "Organização").select(twoCols: _*))
+    val out = fanOut.map { case (name, f) => name -> f(h) }.toMap
+    Outputs(out("acordos"), out("hier"), out("pais"), out("org"))
   }
 }

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
@@ -31,7 +30,8 @@ import org.apache.spark.sql.types.StructType
   *    event-time column, `dropDuplicatesWithinWatermark` bounds it.
   *  - gold: stateless again (silver's output is already globally distinct,
   *    so the reference's redundant gold-side distinct is the identity) —
-  *    one [[runFanOut]] pass derives once and writes all four outputs.
+  *    one [[runFanOut]] pass derives once and writes all four outputs
+  *    ([[Gold.fanOut]], the same projections the batch gold writes).
   */
 object IncrementalMedallion {
 
@@ -112,16 +112,9 @@ object IncrementalMedallion {
       dirs.silver, dirs.ckpt("silver"))
     val silverSchema = Silver.transform(
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), bronzeSchema)).schema
-    val twoCols = Seq(col("local_completo"), col("acordo_recurso"))
-    val silverCols = silverSchema.fieldNames.map(col).toSeq
     // derive runs ONCE per batch (prepare), each sink projects/filters it
-    runFanOut(spark, dirs.silver, silverSchema, Seq(
-      ((h: DataFrame) => h.select(silverCols: _*), dirs.gold("acordos")),
-      ((h: DataFrame) => h.select(twoCols: _*), dirs.gold("hier")),
-      ((h: DataFrame) => h.filter(col("tipo_de_parceiro") === "País")
-        .select(twoCols: _*), dirs.gold("pais")),
-      ((h: DataFrame) => h.filter(col("tipo_de_parceiro") === "Organização")
-        .select(twoCols: _*), dirs.gold("org"))),
+    runFanOut(spark, dirs.silver, silverSchema,
+      Gold.fanOut.map { case (name, f) => (f, dirs.gold(name)) },
       dirs.ckpt("gold"),
       prepare = Gold.derive)
   }

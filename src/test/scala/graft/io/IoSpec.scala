@@ -90,6 +90,50 @@ class SinksSpec2 extends SparkSpec {
     assert(plan.contains("PartitionFilters: [isnotnull(ano"), plan)
   }
 
+  private def parquetFiles(dir: String): Seq[java.nio.file.Path] = {
+    val walk = Files.walk(Paths.get(dir))
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+    } finally walk.close()
+  }
+
+  private def rowsOf(dir: String): Seq[(Long, Int, String)] =
+    spark.read.parquet(dir).select("k", "ano", "v").as[(Long, Int, String)]
+      .collect().toSeq.sorted
+
+  test("K1 partitioned write is clustered: one file per partition value") {
+    val out = Files.createTempDirectory("graft-cluster").toString + "/t"
+    val rows = (0 until 3000).map(i => (i.toLong, 2010 + i % 3, s"v$i"))
+    // every one of the 4 input tasks holds all 3 values: an unclustered
+    // write emits one file per (task, value), 12 here
+    val df = rows.toDF("k", "ano", "v").repartition(4)
+    assert(df.rdd.getNumPartitions === 4)
+    Sinks.writeParquet(df, out, partitionBy = Seq("ano"))
+    val files = parquetFiles(out)
+    assert(files.size === 3, files.mkString("\n"))
+    assert(files.map(_.getParent.getFileName.toString).toSet ===
+      Set("ano=2010", "ano=2011", "ano=2012"))
+    assert(rowsOf(out) === rows.sorted)
+  }
+
+  test("K1 clustered write still splits a skewed partition value by advisory size") {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.get(key)
+    val out = Files.createTempDirectory("graft-cluster-skew").toString + "/t"
+    // ano=2010 is 99% of the rows
+    val rows = (0 until 20000).map(i => (i.toLong, if (i % 100 == 0) 2011 else 2010, s"v$i"))
+    spark.conf.set(key, "4k")
+    try Sinks.writeParquet(rows.toDF("k", "ano", "v").repartition(4), out, partitionBy = Seq("ano"))
+    finally spark.conf.set(key, prev)
+    val perValue = parquetFiles(out).groupBy(_.getParent.getFileName.toString).map {
+      case (p, fs) => p -> fs.size
+    }
+    assert(perValue("ano=2010") > 1, perValue)
+    assert(perValue("ano=2011") === 1, perValue)
+    assert(rowsOf(out) === rows.sorted)
+  }
+
   test("K1 codec choice: zstd write round-trips and marks its files") {
     val out = Files.createTempDirectory("graft-codec").toString + "/t"
     val df = Seq((1, "a"), (2, "b")).toDF("k", "v")

@@ -1,7 +1,11 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.io.Sinks
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** End-to-end bronze→silver→gold on acordos-domain fixtures (FIXTURES.md §A):
   * duplicates, '-' placeholders, malformed dates, nulls, >255-char título,
@@ -86,5 +90,37 @@ class PipelineSpec extends SparkSpec {
     // all levels informative for ONU row (filled at silver) -> concat non-null
     val orgRow = g.org.head()
     assert(orgRow.getString(0) === "Não Informado > Não Informado > Genebra")
+  }
+
+  test("gold: all four outputs read one persisted derived frame; acordos is silver's distinct set") {
+    val silver = Silver.transform(Bronze.transform(rawDf))
+    val cachedBefore = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val g = Gold.transform(silver)
+    val out = java.nio.file.Files.createTempDirectory("graft-gold").toString
+    try {
+      val derived = Gold.derive(silver).queryExecution.withCachedData match {
+        case r: InMemoryRelation => r
+        case p => fail(s"derive(silver) is not served from the cache:\n$p")
+      }
+      assert(derived.cacheBuilder.storageLevel === StorageLevel.MEMORY_AND_DISK)
+      Seq(g.acordos, g.hier, g.pais, g.org).foreach { o =>
+        val rels = o.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
+        assert(rels.map(_.cacheBuilder).exists(_ eq derived.cacheBuilder),
+          o.queryExecution.withCachedData.toString)
+      }
+      // multiset equality: the dropped gold-side distinct was the identity
+      def bag(df: DataFrame) =
+        df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
+      assert(g.acordos.columns.toSeq === silver.columns.toSeq)
+      assert(bag(g.acordos) === bag(silver.dropDuplicates()))
+      Sinks.writeParquet(g.acordos, s"$out/gld_acordos", Seq("ano"))
+      Sinks.writeParquet(g.hier, s"$out/gld_hier")
+      Sinks.writeParquet(g.pais, s"$out/gld_pais")
+      Sinks.writeParquet(g.org, s"$out/gld_org")
+      assert(spark.sparkContext.getRDDStorageInfo.exists(i => !cachedBefore(i.id)))
+    } finally Gold.derive(silver).unpersist(blocking = true)
+    // nothing this refresh cached outlives the release
+    assert(spark.sparkContext.getRDDStorageInfo.map(_.id).toSet.subsetOf(cachedBefore))
+    assert(spark.read.parquet(s"$out/gld_acordos").count() === 2)
   }
 }
